@@ -125,6 +125,7 @@ def main() -> None:
         "start": {"cpu1": _probe_cpu(),
                   "par": _probe_parallel(spark, cpus)},
         "segments_cpu1": [],
+        "segments_par": [],
     }
     seg_queries = seg_work = 0
     for name, fn in entry_mod.queries().items():
@@ -141,6 +142,9 @@ def main() -> None:
             # weather time series across the run (untimed, ~0.1 s).
             host_probe["segments_cpu1"].append(_probe_cpu())
             spark = warm_session(cpus)
+            # The all-cores probe needs a session, so it runs on the
+            # fresh one: bursts on the parallel axis get a series too.
+            host_probe["segments_par"].append(_probe_parallel(spark, cpus))
             seg_queries = seg_work = 0
         runs = []
         for _run in range(3 if warmup else 1):
@@ -239,6 +243,10 @@ def main() -> None:
             "seg_max": (max(host_probe["segments_cpu1"])
                         if host_probe["segments_cpu1"] else None),
         },
+        # par (one codegen'd task per core, ~0.2s healthy) at the same
+        # retirements; start/end are in BENCH_DETAIL.
+        "par_seg_max": (max(host_probe["segments_par"])
+                        if host_probe["segments_par"] else None),
         "queries": {},
         "queries_omitted": len(timings),
     }

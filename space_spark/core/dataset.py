@@ -4658,8 +4658,13 @@ class Dataset:
         """A snapshot's delete stream as PK-only rows. The stored file may
         carry a probe-provenance ``__file`` column (written by the fused
         delete probe); parquet is columnar, so selecting the PKs never
-        reads it."""
-        return self.spark.read.parquet(
+        reads it. The schema is the PKs' physical columns as written, so
+        no footer-inference job runs."""
+        phys = self._physical_schema()
+        schema = T.StructType(
+            [phys[self._phys_name(k)] for k in self.primary_keys]
+        )
+        return self.spark.read.schema(schema).parquet(
             self.log.abs_path(snap.deleted_pks_file)
         ).select(
             *[F.col(self._phys_name(k)).alias(k) for k in self.primary_keys]
@@ -4678,7 +4683,7 @@ class Dataset:
             raise UserInputError(
                 f"Snapshot {snap.snapshot_id} has no delete bitmap"
             )
-        side = self.spark.read.parquet(
+        side = self.spark.read.schema("file string").parquet(
             self.log.abs_path(snap.deleted_bitmap_file)
         )
         pairs = self._bitmap_pairs_df([snap.deleted_bitmap_file])
@@ -4722,10 +4727,11 @@ class Dataset:
 
     def _bitmap_pairs_df(self, sidecar_rels: List[str]) -> DataFrame:
         """Decode bitmap sidecars to (__abs data-file path, __pos) pairs —
-        distributed mapInArrow, O(deleted) output rows."""
-        side = self.spark.read.parquet(
-            *[self.log.abs_path(r) for r in sidecar_rels]
-        )
+        distributed mapInArrow, O(deleted) output rows. The sidecar
+        columns are read as written, so no footer-inference job runs."""
+        side = self.spark.read.schema(
+            "file string, num_rows bigint, bitmap binary"
+        ).parquet(*[self.log.abs_path(r) for r in sidecar_rels])
         location = self.location
 
         def decode(batches):

@@ -2,25 +2,24 @@
 
 Parity: reference RandomAccessDataSource (core/random_access.py:144-241):
 ``__len__`` / ``__getitem__`` / ``__getitems__`` over record-field blobs,
-with file-instruction coalescing (:244-287) — reads for one batch are
-grouped per blob file so each file is opened once.
+with file-instruction coalescing (:244-287) — a batch's reads are grouped
+per (blob file, row group) by ``records.BlobUnits.take``, as Spark reads are.
 
 This is deliberately NOT a Spark job: a training loop issues point reads
 from one process; the address table (small: pk + {file,row_id} per row) is
-fetched once via a reference read, then lookups are local pyarrow reads.
+fetched once via a reference read into Arrow, then lookups decode single
+row groups locally through an LRU of ``file_cache_size`` units.
 At cluster scale each trainer worker holds only its shard of addresses
 (pass a filter to restrict the address fetch).
 """
 
 from __future__ import annotations
 
-import os
-from collections import OrderedDict
-from typing import Any, Callable, Dict, List, Optional, Sequence
+from typing import Any, Callable, List, Optional, Sequence
 
 import pyarrow as pa
 
-from space_spark.core.schema import FILE_COL, ROW_ID_COL
+from space_spark.core import records as rec
 from space_spark.errors import UserInputError
 
 
@@ -66,12 +65,12 @@ class RandomAccessDataSource:
             }
         else:
             self._deserializers = {f: None for f in self.feature_fields}
-        self._cache: OrderedDict = OrderedDict()
-        self._cache_size = file_cache_size
+        self._units = rec.BlobUnits(self.location, self.record_bases,
+                                    file_cache_size)
         # One reference read fetches all addresses (index data only — no
         # blobs move). Ordered by primary key for a stable item order.
         pks = dataset.primary_keys
-        addr_df = (
+        addr = (
             dataset.read(
                 filter_=filter_,
                 fields=list(pks) + self.feature_fields,
@@ -79,54 +78,26 @@ class RandomAccessDataSource:
                 reference_read=True,
             )
             .orderBy(*pks)
-            .toPandas()
+            .toArrow()
         )
         self._addresses = {
-            f: [
-                (row[FILE_COL], row[ROW_ID_COL]) if row is not None else None
-                for row in addr_df[f]
-            ]
-            for f in self.feature_fields
+            f: addr.column(f).combine_chunks() for f in self.feature_fields
         }
-        self._length = len(addr_df)
+        self._length = addr.num_rows
 
     def __len__(self) -> int:
         return self._length
 
-    def _file_column(self, rel_path: str) -> pa.Array:
-        if rel_path in self._cache:
-            self._cache.move_to_end(rel_path)
-            return self._cache[rel_path]
-        from space_spark.core.records import read_blob_column
-
-        col = read_blob_column(self.location, rel_path,
-                               self.record_bases)
-        self._cache[rel_path] = col
-        if len(self._cache) > self._cache_size:
-            self._cache.popitem(last=False)
-        return col
+    def _file_column(self, rel_path: str, row_group: int) -> pa.Array:
+        return self._units.get(rel_path, [row_group])[0]
 
     def _fetch(self, field: str, indices: Sequence[int]) -> List[Any]:
-        addrs = self._addresses[field]
-        out: List[Any] = [None] * len(indices)
-        # Coalesce per blob file (random_access.py:244-287).
-        by_file: Dict[str, List[int]] = {}
-        for pos, idx in enumerate(indices):
-            addr = addrs[idx]
-            if addr is None:
-                continue
-            by_file.setdefault(addr[0], []).append(pos)
+        values = self._units.take(
+            self._addresses[field].take(pa.array(indices, pa.int64())),
+            lambda f, groups: [self._file_column(f, g) for g in groups],
+        ).to_pylist()
         deser = self._deserializers.get(field)
-        for rel_path, positions in by_file.items():
-            col = self._file_column(rel_path)
-            row_ids = pa.array(
-                [addrs[indices[p]][1] for p in positions], pa.int64()
-            )
-            values = col.take(row_ids)
-            for j, p in enumerate(positions):
-                v = values[j].as_py()
-                out[p] = deser(v) if deser else v
-        return out
+        return [deser(v) if deser and v is not None else v for v in values]
 
     def __getitems__(self, indices: Sequence[int]) -> List[Any]:
         for i in indices:

@@ -12,17 +12,22 @@ detail, not a capability).
 
 Both the write and resolve paths run inside ``mapInArrow`` — per-partition,
 Arrow-batched, shared-nothing — so they scale with executors: each task
-writes its own blob files (addresses are file-local, no coordination) and
-resolution groups a batch's addresses by file to batch point-reads
-(read.py:181-189 uses the same group-by-file trick).
+writes its own blob files (addresses are file-local, no coordination).
+Point reads, there and in ``RandomAccessDataSource``, go through
+``BlobUnits.take``: addresses are grouped by (file, row group) — footer row
+counts map row ids to row groups; read.py:181-189 groups by file — and
+only row groups holding requested rows (one per write batch or compacted
+input file) are decoded.
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from collections import OrderedDict
 from typing import Iterator, List, Sequence
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -109,18 +114,80 @@ def resolve_blob_path(location: str, rel_path: str,
     return primary
 
 
-def read_blob_column(location: str, rel_path: str,
-                     bases: Sequence[str] = ()) -> pa.Array:
-    """All record values of one blob file, indexable by _ROW_ID.
-
-    Two layouts: our own record files are single-column Parquet; zero-copy
-    external files (sources/loaders.py append_binary_files) are raw bytes —
-    the whole file is the one record at row id 0."""
+def read_blob_column(location: str, rel_path: str, bases: Sequence[str],
+                     row_groups: Sequence[int]) -> List[pa.Array]:
+    """Record values of some row groups of one blob file, one array per
+    group. Our record files are single-column Parquet; zero-copy external
+    files (sources/loaders.py append_binary_files) are raw bytes — the
+    whole file is the one record at row id 0, in row group 0."""
     abs_path = resolve_blob_path(location, rel_path, bases)
-    if rel_path.endswith(".parquet"):
-        return pq.read_table(abs_path).column(VALUE_COL).combine_chunks()
-    with open(abs_path, "rb") as f:
-        return pa.array([f.read()], pa.binary())
+    if not rel_path.endswith(".parquet"):
+        with open(abs_path, "rb") as f:
+            return [pa.array([f.read()], pa.binary())]
+    pf = pq.ParquetFile(abs_path)
+    return [pf.read_row_group(g, columns=[VALUE_COL], use_threads=False)
+            .column(0).combine_chunks() for g in row_groups]
+
+
+class BlobUnits:
+    """Decoded (blob file, row group) units of one table: an LRU of
+    ``cache_size`` units, and ``starts`` — the first row id of each row
+    group, then the row count — of every file seen, from its footer."""
+
+    def __init__(self, location: str, bases: Sequence[str] = (),
+                 cache_size: int = 2):
+        self.location, self.bases = location, tuple(bases)
+        self.cache_size = cache_size
+        self._starts: dict = {}
+        self._cache: OrderedDict = OrderedDict()
+
+    def starts(self, rel_path: str) -> np.ndarray:
+        if rel_path not in self._starts:
+            counts = [1]
+            if rel_path.endswith(".parquet"):
+                meta = pq.read_metadata(
+                    resolve_blob_path(self.location, rel_path, self.bases))
+                counts = [meta.row_group(i).num_rows
+                          for i in range(meta.num_row_groups)]
+            self._starts[rel_path] = np.cumsum([0] + counts)
+        return self._starts[rel_path]
+
+    def get(self, rel_path: str, groups: List[int]) -> List[pa.Array]:
+        """Units of one file; the missing ones are decoded in one read."""
+        keys = [(rel_path, g) for g in groups]
+        missing = [k for k in keys if k not in self._cache]
+        if missing:
+            self._cache.update(zip(missing, read_blob_column(
+                self.location, rel_path, self.bases,
+                [g for _f, g in missing])))
+        for k in keys:
+            self._cache.move_to_end(k)
+        out = [self._cache[k] for k in keys]
+        while len(self._cache) > self.cache_size:
+            self._cache.popitem(last=False)
+        return out
+
+    def take(self, addresses: pa.StructArray, get) -> pa.Array:
+        """Blob values at ``{_FILE,_ROW_ID}`` addresses, in order (null for
+        a null address): one ``take`` per (file, row group), each file's
+        units fetched with ``get`` (``self.get`` or a wrapper of it)."""
+        files, row_ids = addresses.flatten()
+        codes = pc.dictionary_encode(files)
+        file_ix = pc.fill_null(codes.indices, -1).to_numpy()
+        rows = pc.fill_null(row_ids, 0).to_numpy().astype(np.int64)
+        order = [np.flatnonzero(file_ix < 0)]
+        pieces = [pa.nulls(len(order[0]), pa.binary())]
+        for k, rel_path in enumerate(codes.dictionary.to_pylist()):
+            pos = np.flatnonzero(file_ix == k)
+            starts = self.starts(rel_path)
+            group = np.searchsorted(starts, rows[pos], side="right") - 1
+            needed = np.unique(group)
+            for g, unit in zip(needed, get(rel_path, needed.tolist())):
+                sel = pos[group == g]
+                pieces.append(unit.take(rows[sel] - starts[g]))
+                order.append(sel)
+        return pa.concat_arrays(pieces).take(
+            np.argsort(np.concatenate(order)))
 
 
 def write_record_fields(
@@ -162,66 +229,28 @@ def resolve_record_fields(
 ) -> DataFrame:
     """Physical DataFrame -> logical: fetch blob bytes for address columns.
 
-    Addresses in a batch are grouped by file so each blob file is read once
-    per batch (read.py:155-205); a tiny per-task cache handles consecutive
-    batches hitting the same file.
+    A batch's addresses resolve through ``BlobUnits.take``
+    (read.py:155-205); its tiny per-task cache handles consecutive
+    batches sharing a row group.
     """
     selected = [f.name for f in df.schema.fields]
-    out_fields = [
-        T.StructField(
-            f, T.BinaryType(), True
-        ) if f in record_fields else logical_schema[f]
-        for f in selected
-    ]
     out_schema = T.StructType([
-        T.StructField(sf.name, sf.dataType, True) for sf in out_fields
+        T.StructField(f, T.BinaryType() if f in record_fields
+                      else logical_schema[f].dataType, True)
+        for f in selected
     ])
     fields = [f for f in record_fields if f in selected]
     loc = location
     base_list = tuple(bases)
 
     def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cache: dict = {}
-
-        def load(rel_path: str) -> pa.Array:
-            if rel_path not in cache:
-                if len(cache) >= 2:
-                    cache.clear()
-                cache[rel_path] = read_blob_column(loc, rel_path,
-                                                   base_list)
-            return cache[rel_path]
-
+        units = BlobUnits(loc, base_list)
         for batch in batches:
-            arrays, names = [], []
-            for i, name in enumerate(batch.schema.names):
-                col = batch.column(i)
-                if name in fields:
-                    arrays.append(_resolve_column(col, load))
-                else:
-                    arrays.append(col)
-                names.append(name)
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            yield pa.RecordBatch.from_arrays(
+                [units.take(col, units.get) if name in fields else col
+                 for name, col in zip(batch.schema.names, batch.columns)],
+                names=batch.schema.names,
+            )
 
     return df.mapInArrow(task, out_schema)
 
-
-def _resolve_column(addresses: pa.Array, load) -> pa.Array:
-    """Resolve one address-struct column to binary values, order-preserving."""
-    n = len(addresses)
-    files = addresses.field(FILE_COL)
-    row_ids = addresses.field(ROW_ID_COL)
-    out: List = [None] * n
-    files_py = files.to_pylist()
-    rows_py = row_ids.to_pylist()
-    by_file: dict = {}
-    for idx in range(n):
-        f = files_py[idx]
-        if f is None:
-            continue
-        by_file.setdefault(f, []).append(idx)
-    for f, idxs in by_file.items():
-        values = load(f)
-        taken = values.take(pa.array([rows_py[i] for i in idxs], pa.int64()))
-        for j, i in enumerate(idxs):
-            out[i] = taken[j].as_py()
-    return pa.array(out, pa.binary())

@@ -117,6 +117,26 @@ def test_mor_diff_emits_delete_rows(table):
     assert d.where("_change_type = 'ADD'").count() == 0
 
 
+def test_diff_plans_without_spark_jobs(spark, table):
+    """Building a change feed over an upsert and a merge-on-read delete
+    submits no Spark job: the delete streams are read with the schema
+    they were written with, so there is no footer-inference job."""
+    ds = table
+    v0 = ds.current_snapshot_id
+    ds.upsert(spark.createDataFrame([(5, 55), (200, 0)], "id long, v long"))
+    ds.delete(field("id") < lit(3), rewrite=False)
+    v2 = ds.current_snapshot_id
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    before = len(list(tracker.getJobIdsForGroup(None)))
+    d = ds.diff(v0, v2)
+    assert len(list(tracker.getJobIdsForGroup(None))) == before
+    rows = d.collect()
+    assert sorted(r["id"] for r in rows
+                  if r["_change_type"] == "DELETE") == [0, 1, 2, 5]
+    assert sorted((r["id"], r["v"]) for r in rows
+                  if r["_change_type"] == "ADD") == [(5, 55), (200, 0)]
+
+
 def test_mor_read_by_keys_masked(table):
     ds = table
     ds.delete(field("id") == lit(7), rewrite=False)
